@@ -4,11 +4,21 @@ The reference records per-(graph, command, partition_count) latencies in a
 SQLite perfdb and uses them for SLA-aware admission (ddl/perfdb.sql;
 CypherQueryExecutor.cpp:164-189,366-376; JobScheduler.cpp:79-105 can
 reject high-priority jobs whose SLA cannot be met). Here the same records
-live in a parquet table and the admission check is a simple estimate
+live in a parquet directory and the admission check is a simple estimate
 lookup — scheduling itself belongs to Spark/YARN/K8s.
 
-Ledger paths are LOCAL-FILESYSTEM by design (the part-file counting in
-`record` and the atomic rename in `compact` use os.* APIs): a ledger on
+The ledger is written from the driver with pyarrow, like the reference's
+one-row SQLite insert: `record` writes its row to a hidden
+`.part-<uuid>.parquet.tmp` inside the ledger directory and renames it to
+`part-<uuid>.parquet`, so each record is atomic and a crash mid-record
+leaves nothing visible (Spark and pyarrow both skip `.`/`_`-prefixed
+files). No Spark job runs behind a record. Reads go through Spark with the
+declared schema (`history()`), so an SLA check pays no schema-inference
+job. Part files written by Spark's parquet writer carry the same columns
+and stay readable and compactable.
+
+Ledger paths are LOCAL-FILESYSTEM by design (the writer, the part-file
+counting in `record` and the atomic renames use os.* APIs): a ledger on
 HDFS/S3 would need the Hadoop FileSystem API instead — a documented seam,
 not a silent fallback. Compaction is crash-safe: the compacted ledger is
 written to a sibling temp directory and swapped in by rename, with the
@@ -18,12 +28,40 @@ previous directory recoverable until the swap completes.
 from __future__ import annotations
 
 import os
+import shutil
 import time
+import uuid
+from collections import Counter
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+#: the ledger's one schema: the Arrow writer uses it as is, Spark reads
+#: with its converted twin (no inference job per read)
+_SCHEMA = pa.schema(
+    [
+        ("name", pa.string()),
+        ("command", pa.string()),
+        ("partitions", pa.int32()),
+        ("seconds", pa.float64()),
+        ("ts", pa.float64()),
+    ]
+)
+_SPARK_SCHEMA = from_arrow_schema(_SCHEMA)
+
+
+def _write_part(table: pa.Table, directory: str) -> None:
+    """Write `table` as one new part file in `directory`: a hidden temp
+    file first, then a rename, so readers see the whole file or none."""
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.rename(tmp, os.path.join(directory, name))
 
 
 @dataclass
@@ -42,19 +80,19 @@ class PerfCatalog:
 
     def record(self, name: str, command: str, partitions: int, seconds: float) -> None:
         self._recover()
-        df = self.spark.createDataFrame(
-            [(name, command, partitions, float(seconds), float(time.time()))],
-            "name string, command string, partitions int, seconds double, ts double",
+        os.makedirs(self.path, exist_ok=True)
+        row = pa.Table.from_pydict(
+            {
+                "name": [name],
+                "command": [command],
+                "partitions": [int(partitions)],
+                "seconds": [float(seconds)],
+                "ts": [time.time()],
+            },
+            schema=_SCHEMA,
         )
-        df.coalesce(1).write.mode("append").parquet(self.path)
-        try:
-            n_parts = sum(
-                1 for f in os.listdir(self.path) if f.endswith(".parquet")
-            )
-        except OSError:
-            # non-local path (or racing delete): auto-compaction is a
-            # local-FS feature — see the module docstring's seam note
-            return
+        _write_part(row, self.path)
+        n_parts = sum(1 for f in os.listdir(self.path) if f.endswith(".parquet"))
         if n_parts > self.COMPACT_EVERY:
             self.compact()
 
@@ -77,35 +115,29 @@ class PerfCatalog:
         if not os.path.exists(self.path):
             return 0
         keep = keep_last if keep_last is not None else self.KEEP_LAST
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("name", "command").orderBy(F.col("ts").desc())
-        kept = (
-            self.history()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= keep)
-            .drop("_rn")
-        )
-        rows = kept.collect()  # ledger is small by construction after cap
-        out = self.spark.createDataFrame(
-            rows,
-            "name string, command string, partitions int, seconds double, ts double",
-        )
-        # crash-safe swap: never mode('overwrite') the live ledger (that
-        # deletes it before rewriting — a crash mid-write loses the whole
-        # history). Write beside it, then two renames; _recover() heals a
-        # crash landing between them.
-        import shutil
-
+        # the ledger is small by construction after the cap: read it on
+        # the driver (dataset discovery skips `.`/`_`-prefixed files, so
+        # in-flight record temps and Spark's _SUCCESS/.crc are ignored)
+        table = pq.read_table(self.path, schema=_SCHEMA).sort_by([("ts", "descending")])
+        seen: Counter = Counter()
+        kept = []
+        for i, key in enumerate(zip(table["name"].to_pylist(), table["command"].to_pylist())):
+            seen[key] += 1
+            if seen[key] <= keep:
+                kept.append(i)
+        # crash-safe swap: never overwrite the live ledger in place (a
+        # crash mid-write would lose the whole history). Write beside it,
+        # then two renames; _recover() heals a crash landing between them.
         tmp = self.path.rstrip("/") + ".compact-tmp"
         old = self.path.rstrip("/") + ".compact-old"
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
-        out.coalesce(1).write.mode("overwrite").parquet(tmp)
+        os.makedirs(tmp)
+        _write_part(table.take(pa.array(kept, pa.int64())), tmp)
         os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old, ignore_errors=True)
-        return len(rows)
+        return len(kept)
 
     @contextmanager
     def timed(self, name: str, command: str, partitions: int = 0):
@@ -115,7 +147,7 @@ class PerfCatalog:
 
     def history(self) -> DataFrame:
         self._recover()
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(_SPARK_SCHEMA).parquet(self.path)
 
     def estimate(self, name: str, command: str) -> float | None:
         """Median observed latency for (name, command) — the calibration

@@ -34,7 +34,10 @@ def _as_double(col: str):
     return F.expr(f"transform({col}, x -> cast(x as double))")
 
 
-_COS6_UDF = None  # built lazily: pandas_udf needs an active session
+#: (deterministic, non-deterministic) twins, built lazily (pandas_udf needs
+#: an active session) as two objects: asNondeterministic() flips its UDF
+#: in place, so deriving one from the other would leak the flag
+_COS6_UDFS = None
 
 
 def _round6_half_up(c: np.ndarray) -> np.ndarray:
@@ -82,8 +85,8 @@ def _cos6(a: str, b: str, nondet: bool = False):
     the function itself is pure, so results are unchanged. Callers that
     only window/rank over the column keep the deterministic default
     (non-determinism would block their own legitimate pushdowns)."""
-    global _COS6_UDF
-    if _COS6_UDF is None:
+    global _COS6_UDFS
+    if _COS6_UDFS is None:
 
         def _cos6_batch(x_s: pd.Series, y_s: pd.Series) -> pd.Series:
             n = len(x_s)
@@ -124,9 +127,11 @@ def _cos6(a: str, b: str, nondet: bool = False):
             res[np.isnan(out)] = pd.NA  # NaN only arises from degenerate rows
             return res
 
-        _COS6_UDF = F.pandas_udf(_cos6_batch, "double")
-    fn = _COS6_UDF.asNondeterministic() if nondet else _COS6_UDF
-    return fn(F.col(a), F.col(b))
+        _COS6_UDFS = (
+            F.pandas_udf(_cos6_batch, "double"),
+            F.pandas_udf(_cos6_batch, "double").asNondeterministic(),
+        )
+    return _COS6_UDFS[nondet](F.col(a), F.col(b))
 
 
 def _dot(a: str, b: str):

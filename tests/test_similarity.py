@@ -535,6 +535,23 @@ def test_cos6_degenerate_rows_yield_null(spark):
     assert {r["id"] for r in kept.collect()} == {1, 5}
 
 
+def test_cos6_nondet_call_leaves_default_deterministic(spark):
+    """ADVICE r14: asNondeterministic() flips its UDF object in place, so
+    a nondet=True call must not turn every later default _cos6 into a
+    non-deterministic expression (that would silently block the
+    pushdowns its rank/window callers rely on)."""
+    from jasminegraph_spark.pipeline.similarity import _cos6
+
+    df = spark.createDataFrame([([1.0], [1.0])], "qv array<double>, cv array<double>")
+
+    def deterministic(col):
+        plan = df.select(col.alias("c"))._jdf.queryExecution().analyzed()
+        return plan.expressions().apply(0).deterministic()
+
+    assert not deterministic(_cos6("qv", "cv", nondet=True))
+    assert deterministic(_cos6("qv", "cv"))
+
+
 def test_semantic_dedup_zero_norm_kept_and_inert(spark):
     """Deliberate zero-norm semantics (ADVICE r11): a zero vector is
     directionless — never a near-duplicate of anything, never drops a

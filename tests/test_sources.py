@@ -112,7 +112,6 @@ def test_perf_catalog(spark, tmp_path):
     assert not pc.admits("g1", "cypher", 0.1)
 
 
-@pytest.mark.sweep  # r14: multi-minute quality/property row -> sweep tier (see pyproject)
 def test_perf_catalog_family_rollup_and_compaction(spark, tmp_path):
     """r9: per-query fingerprint keys roll up to a family estimate, and
     compact() bounds the per-key history so the full-table estimate read
@@ -166,6 +165,87 @@ def test_perf_catalog_compaction_crash_recovery(spark, tmp_path):
     assert os.path.exists(path) and not os.path.exists(path + ".compact-old")
     pc.record("g1", "trian", 2, 0.4)  # appends to the healed ledger
     assert pc.history().count() == 3
+
+
+def _job_ids(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def test_perf_catalog_record_starts_no_spark_job(spark, tmp_path):
+    """The ledger is written from the driver (one pyarrow part file per
+    record): recording a latency runs no Spark job."""
+    from jasminegraph_spark.perf import PerfCatalog
+
+    pc = PerfCatalog(spark, str(tmp_path / "perfdb"))
+    before = _job_ids(spark)
+    for s in (0.1, 0.2):
+        pc.record("g1", "cypher", 2, s)
+    with pc.timed("g1", "trian", 2):
+        pass
+    assert _job_ids(spark) - before == set()
+    assert pc.history().count() == 3
+
+
+def test_perf_catalog_history_starts_no_spark_job(spark, tmp_path):
+    """history() reads with the declared schema, so opening the ledger for
+    an SLA check pays no parquet schema-inference job."""
+    from jasminegraph_spark.perf import PerfCatalog
+
+    pc = PerfCatalog(spark, str(tmp_path / "perfdb"))
+    pc.record("g1", "cypher", 2, 0.1)
+    before = _job_ids(spark)
+    hist = pc.history()
+    assert _job_ids(spark) - before == set()
+    assert hist.schema.simpleString() == (
+        "struct<name:string,command:string,partitions:int,seconds:double,ts:double>"
+    )
+
+
+def test_perf_catalog_reads_spark_written_parts(spark, tmp_path):
+    """A ledger holding a part appended by Spark's parquet writer (the
+    earlier write path, with its _SUCCESS and .crc files) plus new
+    driver-written records reads, estimates and compacts over both."""
+    import time
+
+    from jasminegraph_spark.perf import PerfCatalog
+
+    path = str(tmp_path / "perfdb")
+    spark.createDataFrame(
+        [("g1", "trian", 2, 0.1, time.time() - 60.0), ("g1", "pgrnk", 2, 5.0, time.time() - 60.0)],
+        "name string, command string, partitions int, seconds double, ts double",
+    ).coalesce(1).write.mode("append").parquet(path)
+    pc = PerfCatalog(spark, path)
+    for s in (0.2, 0.3):
+        pc.record("g1", "trian", 2, s)
+    assert pc.history().count() == 4
+    assert pc.estimate("g1", "trian") == 0.2
+    assert pc.estimate("g1", "pgrnk") == 5.0
+    assert pc.compact(keep_last=2) == 3
+    hist = {(r["command"], r["seconds"]) for r in pc.history().collect()}
+    assert hist == {("trian", 0.2), ("trian", 0.3), ("pgrnk", 5.0)}  # oldest trian dropped
+    pc.record("g1", "trian", 2, 0.4)
+    assert pc.history().count() == 4
+
+
+def test_perf_catalog_ignores_crashed_record_temp(spark, tmp_path):
+    """A crash mid-record leaves only the hidden `.part-*.tmp` file: it is
+    invisible to history(), estimate() and compact() (compaction's swap
+    drops it)."""
+    import os
+
+    from jasminegraph_spark.perf import PerfCatalog
+
+    path = str(tmp_path / "perfdb")
+    pc = PerfCatalog(spark, path)
+    for s in (0.1, 0.3):
+        pc.record("g1", "trian", 2, s)
+    with open(os.path.join(path, ".part-deadbeef.parquet.tmp"), "wb") as fh:
+        fh.write(b"PAR1 truncated mid-write")
+    assert pc.history().count() == 2
+    assert pc.estimate("g1", "trian") == 0.1
+    assert pc.compact() == 2
+    assert not any(f.endswith(".tmp") for f in os.listdir(path))
+    assert sorted(r["seconds"] for r in pc.history().collect()) == [0.1, 0.3]
 
 
 def test_as_of_join_semantics(spark):
